@@ -12,10 +12,12 @@ redelivered later.  Spark mapping:
   rescheduled rows are written with a ``not_before`` visibility timestamp
   and re-ingested by a later micro-batch (SURVEY §7.4.6).
 
-Fan-out (B14): N subscriptions with distinct selectors over one source are
-evaluated in a single scan by adding one boolean column per subscription —
-the scan and JSON parse are shared; at 100 TB this is N× cheaper than N
-passes.
+Fan-out (B14): :func:`fan_out` evaluates N subscriptions with distinct
+selectors over one source in a single scan by adding one boolean column per
+subscription — the scan and JSON parse are shared; at 100 TB this is N×
+cheaper than N passes.  :func:`subscription_views` instead returns one
+filtered DataFrame per subscription; each view that is written or counted
+is its own scan.
 """
 
 from __future__ import annotations
@@ -28,6 +30,10 @@ from pulsar_message_filter_spark.selector import EVENTS_SCHEMA, Schema, Selector
 ACCEPT = "ACCEPT"
 REJECT = "REJECT"
 RESCHEDULE = "RESCHEDULE"
+
+
+def _selector(sel: Selector | str, schema: Schema) -> Selector:
+    return sel if isinstance(sel, Selector) else Selector(sel, schema)
 
 
 def with_verdict(
@@ -43,15 +49,9 @@ def with_verdict(
     matches; else RESCHEDULE if that predicate matches; else REJECT.
     UNKNOWN (null) predicate results do not select — JMS 3VL (B3).
     """
-    accept_sel = accept if isinstance(accept, Selector) else Selector(accept, schema)
-    verdict = F.when(accept_sel.column(), F.lit(ACCEPT))
+    verdict = F.when(_selector(accept, schema).column(), F.lit(ACCEPT))
     if reschedule is not None:
-        resched_sel = (
-            reschedule
-            if isinstance(reschedule, Selector)
-            else Selector(reschedule, schema)
-        )
-        verdict = verdict.when(resched_sel.column(), F.lit(RESCHEDULE))
+        verdict = verdict.when(_selector(reschedule, schema).column(), F.lit(RESCHEDULE))
     return df.withColumn(verdict_col, verdict.otherwise(F.lit(REJECT)))
 
 
@@ -84,11 +84,10 @@ def fan_out(
     view is ``df.filter(F.col(f'{prefix}{name}'))`` — all sharing a single
     scan + JSON parse."""
     for name, sel in subscriptions.items():
-        selector = sel if isinstance(sel, Selector) else Selector(sel, schema)
         # coalesce(false): UNKNOWN → not selected, pinned at the column level
         # so the fan-out columns are concrete booleans.
         df = df.withColumn(
-            f"{prefix}{name}", F.coalesce(selector.column(), F.lit(False))
+            f"{prefix}{name}", F.coalesce(_selector(sel, schema).column(), F.lit(False))
         )
     return df
 
@@ -98,10 +97,11 @@ def subscription_views(
     subscriptions: dict[str, Selector | str],
     schema: Schema = EVENTS_SCHEMA,
 ) -> dict[str, DataFrame]:
-    """Materialize each subscription's filtered view from one fanned-out scan."""
-    tagged = fan_out(df, subscriptions, schema)
-    drop = [f"sub_{name}" for name in subscriptions]
+    """Each subscription's filtered view of ``df`` — ``{name: sel.apply(df)}``.
+
+    Every view is planned and executed on its own (one scan per view acted
+    on); :func:`fan_out` is the one-scan primitive for evaluating all
+    subscriptions together."""
     return {
-        name: tagged.filter(F.col(f"sub_{name}")).drop(*drop)
-        for name in subscriptions
+        name: _selector(sel, schema).apply(df) for name, sel in subscriptions.items()
     }

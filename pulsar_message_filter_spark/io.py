@@ -102,6 +102,10 @@ def invalidate_load_memo(spark: SparkSession | None = None) -> None:
         _RESOLVED.pop(spark, None)
 
 
+#: Default of ``spark.pmf.widen.floor`` (see :func:`widen`).
+_WIDEN_FLOOR = 16
+
+
 def widen(df: DataFrame, key: str | None = None) -> DataFrame:
     """Round a narrow scan up to cluster width (guide §2.5).
 
@@ -128,7 +132,10 @@ def widen(df: DataFrame, key: str | None = None) -> DataFrame:
     # at 1–3 partitions still widen to cluster width, unchanged.  NOTE:
     # the decision is plan-build-time from the scan's partition count, so
     # plan snapshots are parallelism-dependent (see tools/plan_snapshot).
-    floor = int(spark.conf.get("spark.pmf.widen.floor", "16"))
+    try:
+        floor = int(spark.conf.get("spark.pmf.widen.floor", str(_WIDEN_FLOOR)))
+    except ValueError:  # a malformed conf must not fail every widened query
+        floor = _WIDEN_FLOOR
     if df.rdd.getNumPartitions() >= min(par, floor):
         return df
     return df.repartition(par, key) if key else df.repartition(par)

@@ -273,32 +273,6 @@ def lsh_bucket(
     return bucket
 
 
-def lsh_buckets(
-    emb: Column,
-    n_tables: int = 8,
-    planes_per_table: int = 4,
-    dim: int = EMB_DIM,
-    seed: int = 42,
-) -> Column:
-    """Multi-table LSH keys: array of ``struct<tbl, bucket>``.
-
-    OR-amplification: a pair is a candidate if it collides in ANY of the
-    L tables — with per-plane agreement probability p, candidate
-    probability is 1-(1-p^k)^L, tunable to the recall target (k planes
-    controls precision, L tables recall)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                lsh_bucket(emb, planes_per_table, dim, seed + 1000 * t).alias(
-                    "bucket"
-                ),
-            )
-            for t in range(n_tables)
-        ]
-    )
-
-
 def lsh_table_buckets_np(
     n_tables: int, planes_per_table: int, dim: int = EMB_DIM, seed: int = 42
 ):

@@ -6,8 +6,9 @@ ecosystem is the JMS 2.0 §3.8 selector language (public spec; SURVEY §0.3).
 Upstream contract: parse the subscription's selector once at consumer
 attach, evaluate per message at dispatch, against message *metadata*
 (properties map + headers), never the payload.  Here: parse once per
-:class:`Selector`, compile to a Catalyst ``Column``, evaluate vectorized
-inside whole-stage codegen — same contract, columnar execution.
+:class:`Selector`, compile to one Spark SQL expression (a Catalyst
+``Column``), evaluate vectorized inside whole-stage codegen — same
+contract, columnar execution.
 """
 
 from __future__ import annotations
@@ -64,7 +65,7 @@ class Selector:
         return to_sql(self.ast, self.schema, "duckdb")
 
     def spark_sql(self) -> str:
-        """→ Spark-SQL predicate text (``F.expr``-able; debugging surface)."""
+        """→ Spark-SQL predicate text, the source of :meth:`column`."""
         return to_sql(self.ast, self.schema, "spark")
 
     def apply(self, df):

@@ -1,6 +1,6 @@
-"""Selector AST → (typed AST) → PySpark ``Column`` / DuckDB oracle SQL.
+"""Selector AST → (typed AST) → SQL text for Spark and the DuckDB oracle.
 
-Three passes (SURVEY.md §3.2):
+Two passes (SURVEY.md §3.2):
 
 1. :func:`annotate` — type inference + JMS context coercion (B11).  Message
    properties extracted from the JSON ``props`` column are ``dynamic``
@@ -8,17 +8,18 @@ Three passes (SURVEY.md §3.2):
    timestamp context casts string literals to timestamp.  Try-cast (NULL on
    failure) matches the JMS rule that an inconvertible property makes the
    predicate UNKNOWN — and keeps Spark's ANSI mode from throwing.
-2. :func:`to_column` — builds a native ``pyspark.sql.Column`` tree.  The
-   output is ordinary Catalyst IR, so predicate pushdown / column pruning /
-   whole-stage codegen apply with zero extra work (SURVEY.md §4.2).
-3. :func:`to_sql` — renders the *same* typed AST as SQL in either the
-   ``duckdb`` (oracle) or ``spark`` dialect; dialects differ only in JSON
-   extraction and regex-match spelling.  One AST feeding both engines is
-   what makes every selector query oracle-checkable by construction.
+2. :func:`to_sql` — renders the typed AST as SQL in either the ``duckdb``
+   (oracle) or ``spark`` (execution) dialect.  :func:`to_column` hands the
+   spark text to ``F.expr``: one JVM call per selector yields ordinary
+   Catalyst IR, so predicate pushdown / column pruning / whole-stage codegen
+   apply with zero extra work (SURVEY.md §4.2).  One AST feeding both
+   engines is what makes every selector query oracle-checkable by
+   construction.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 
 from pulsar_message_filter_spark.selector.ast_nodes import (
@@ -250,15 +251,14 @@ def annotate(node: Node, schema: Schema) -> Node:
 
 
 # --------------------------------------------------------------------------
-# Pass 2 — PySpark Column backend
+# Pass 2 — SQL backends (duckdb oracle / spark execution)
 # --------------------------------------------------------------------------
 
 
 def like_pattern_to_regex(pattern: str, escape: str | None) -> str:
     """Translate a SQL LIKE pattern (with optional ESCAPE) to an anchored
-    regex — used only for the LIKE…ESCAPE form, which the pyspark ``Column``
-    API does not expose directly.  Semantics match SQL: ``%`` → ``.*``,
-    ``_`` → ``.``, escaped wildcard chars are literal."""
+    regex — the Spark rendering of LIKE…ESCAPE.  Semantics match SQL:
+    ``%`` → ``.*``, ``_`` → ``.``, escaped wildcard chars are literal."""
     import re as _re
 
     out, i = ["(?s)^"], 0
@@ -279,150 +279,104 @@ def like_pattern_to_regex(pattern: str, escape: str | None) -> str:
     return "".join(out)
 
 
-def to_column(node: Node, schema: Schema):
-    """Typed AST → native pyspark Column (requires an active session)."""
-    from pyspark.sql import functions as F
-
-    def build(n: Node):
-        if isinstance(n, Lit):
-            return F.lit(n.value)
-        if isinstance(n, Ident):
-            kind, detail = n.resolved  # type: ignore[attr-defined]
-            if kind == "col":
-                return F.col(n.name)
-            return F.get_json_object(F.col(schema.props_col), f"$.{detail}")
-        if isinstance(n, Cast):
-            if n.to == "boolean":
-                # JMS Boolean.valueOf: true iff equalsIgnoreCase("true");
-                # any other string is false; missing property stays NULL
-                # (engines' native string→bool casts disagree on 'yes'/'y').
-                return F.lower(build(n.operand)) == "true"
-            return build(n.operand).try_cast(n.to)
-        if isinstance(n, Unary):
-            c = build(n.operand)
-            return -c if n.op == "-" else c
-        if isinstance(n, Arith):
-            l, r = build(n.left), build(n.right)
-            return {
-                "+": l + r,
-                "-": l - r,
-                "*": l * r,
-                "/": l / r,
-                "%": l % r,
-            }[n.op]
-        if isinstance(n, Cmp):
-            l, r = build(n.left), build(n.right)
-            return {
-                "=": l == r,
-                "<>": l != r,
-                "<": l < r,
-                "<=": l <= r,
-                ">": l > r,
-                ">=": l >= r,
-            }[n.op]
-        if isinstance(n, Between):
-            c = build(n.operand).between(build(n.low), build(n.high))
-            return ~c if n.negated else c
-        if isinstance(n, In):
-            c = build(n.operand).isin([v.value for v in n.values])
-            return ~c if n.negated else c
-        if isinstance(n, Like):
-            col = build(n.operand)
-            if n.escape is None:
-                c = col.like(n.pattern)
-            else:
-                c = col.rlike(like_pattern_to_regex(n.pattern, n.escape))
-            return ~c if n.negated else c
-        if isinstance(n, Regex):
-            c = build(n.operand).rlike(n.pattern)
-            return ~c if n.negated else c
-        if isinstance(n, IsNull):
-            c = build(n.operand)
-            return c.isNotNull() if n.negated else c.isNull()
-        if isinstance(n, Not):
-            return ~build(n.operand)
-        if isinstance(n, And):
-            return build(n.left) & build(n.right)
-        if isinstance(n, Or):
-            return build(n.left) | build(n.right)
-        raise SelectorTypeError(f"unknown AST node {n!r}")
-
-    return build(node)
-
-
-# --------------------------------------------------------------------------
-# Pass 3 — SQL backends (duckdb oracle / spark debug)
-# --------------------------------------------------------------------------
-
-
-def _sql_str(value: str) -> str:
-    return "'" + value.replace("'", "''") + "'"
-
-
 def to_sql(node: Node, schema: Schema, dialect: str = "duckdb") -> str:
     """Render the typed AST as SQL.  ``duckdb`` is the oracle dialect;
-    ``spark`` is a debugging/`F.expr` surface.  Dialect differences:
+    ``spark`` is the execution dialect, parsed by :func:`to_column`.
+    Dialect differences:
 
-    ===================  ==============================  =========================
+    ===================  ==============================  ===========================
     construct            duckdb                          spark
-    ===================  ==============================  =========================
-    property access      json_extract_string(p,'$.k')    get_json_object(p,'$.k')
-    try-cast             TRY_CAST(x AS T)                TRY_CAST(x AS T)
+    ===================  ==============================  ===========================
+    string literal       'a''b'                          'a''b', backslash doubled
+    double literal       0.2                             0.2D
+    column name          value                           `value`
+    property access      json_extract_string(p,'$.k')    get_json_object(`p`,'$.k')
+    try-cast to string   TRY_CAST(x AS VARCHAR)          TRY_CAST(x AS STRING)
+    BETWEEN              x BETWEEN lo AND hi             (x >= lo) AND (x <= hi)
+    LIKE … ESCAPE        x LIKE 'p' ESCAPE 'e'           x RLIKE '<anchored regex>'
     regex match          regexp_matches(x,'p')           x RLIKE 'p'
-    ===================  ==============================  =========================
+    ===================  ==============================  ===========================
+
+    The spark column is the same expression the ``pyspark`` Column API
+    builds for each construct (``Column.between`` is the >=/<= pair), so
+    the analyzed plan is what a hand-built Column would give.
     """
     if dialect not in ("duckdb", "spark"):
         raise ValueError(f"unknown dialect {dialect!r}")
+    spark = dialect == "spark"
 
     type_names = {
         "double": "DOUBLE",
         "long": "BIGINT",
         "timestamp": "TIMESTAMP",
-        "string": "VARCHAR",
+        "string": "STRING" if spark else "VARCHAR",
         "boolean": "BOOLEAN",
     }
+
+    def string(value: str) -> str:
+        # Spark reads backslash as an escape inside string literals
+        if spark:
+            value = value.replace("\\", "\\\\")
+        return "'" + value.replace("'", "''") + "'"
+
+    def column(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`" if spark else name
 
     def render(n: Node) -> str:
         if isinstance(n, Lit):
             if n.kind == "string":
-                return _sql_str(str(n.value))
+                return string(str(n.value))
             if n.kind == "boolean":
                 return "TRUE" if n.value else "FALSE"
+            if n.kind == "double":
+                if not math.isfinite(n.value):
+                    return f"CAST('{n.value!r}' AS DOUBLE)"
+                return f"{n.value!r}D" if spark else repr(n.value)
             return repr(n.value)
         if isinstance(n, Ident):
             kind, detail = n.resolved  # type: ignore[attr-defined]
             if kind == "col":
-                return n.name
-            if dialect == "duckdb":
-                return f"json_extract_string({schema.props_col}, '$.{detail}')"
-            return f"get_json_object({schema.props_col}, '$.{detail}')"
+                return column(n.name)
+            fn = "get_json_object" if spark else "json_extract_string"
+            return f"{fn}({column(schema.props_col)}, {string('$.' + detail)})"
         if isinstance(n, Cast):
             if n.to == "boolean":
-                # JMS Boolean.valueOf — see the Column backend twin
+                # JMS Boolean.valueOf: true iff equalsIgnoreCase("true");
+                # any other string is false; missing property stays NULL
+                # (engines' native string→bool casts disagree on 'yes'/'y').
                 return f"(lower({render(n.operand)}) = 'true')"
             return f"TRY_CAST({render(n.operand)} AS {type_names[n.to]})"
         if isinstance(n, Unary):
+            if spark:
+                # -(x): a bare minus would fold into a negative literal
+                return render(n.operand) if n.op == "+" else f"(-({render(n.operand)}))"
             return f"({n.op}{render(n.operand)})"
-        if isinstance(n, Arith):
-            return f"({render(n.left)} {n.op} {render(n.right)})"
-        if isinstance(n, Cmp):
+        if isinstance(n, (Arith, Cmp)):
             return f"({render(n.left)} {n.op} {render(n.right)})"
         if isinstance(n, Between):
+            x, lo, hi = render(n.operand), render(n.low), render(n.high)
+            if spark:
+                expr = f"(({x} >= {lo}) AND ({x} <= {hi}))"
+                return f"(NOT {expr})" if n.negated else expr
             kw = "NOT BETWEEN" if n.negated else "BETWEEN"
-            return f"({render(n.operand)} {kw} {render(n.low)} AND {render(n.high)})"
+            return f"({x} {kw} {lo} AND {hi})"
         if isinstance(n, In):
             kw = "NOT IN" if n.negated else "IN"
             vals = ", ".join(render(v) for v in n.values)
             return f"({render(n.operand)} {kw} ({vals}))"
         if isinstance(n, Like):
+            if spark and n.escape:
+                regex = like_pattern_to_regex(n.pattern, n.escape)
+                expr = f"({render(n.operand)} RLIKE {string(regex)})"
+                return f"(NOT {expr})" if n.negated else expr
             kw = "NOT LIKE" if n.negated else "LIKE"
-            esc = f" ESCAPE {_sql_str(n.escape)}" if n.escape else ""
-            return f"({render(n.operand)} {kw} {_sql_str(n.pattern)}{esc})"
+            esc = f" ESCAPE {string(n.escape)}" if n.escape else ""
+            return f"({render(n.operand)} {kw} {string(n.pattern)}{esc})"
         if isinstance(n, Regex):
-            if dialect == "duckdb":
-                expr = f"regexp_matches({render(n.operand)}, {_sql_str(n.pattern)})"
+            if spark:
+                expr = f"({render(n.operand)} RLIKE {string(n.pattern)})"
             else:
-                expr = f"({render(n.operand)} RLIKE {_sql_str(n.pattern)})"
+                expr = f"regexp_matches({render(n.operand)}, {string(n.pattern)})"
             return f"(NOT {expr})" if n.negated else expr
         if isinstance(n, IsNull):
             kw = "IS NOT NULL" if n.negated else "IS NULL"
@@ -436,3 +390,11 @@ def to_sql(node: Node, schema: Schema, dialect: str = "duckdb") -> str:
         raise SelectorTypeError(f"unknown AST node {n!r}")
 
     return render(node)
+
+
+def to_column(node: Node, schema: Schema):
+    """Typed AST → ``pyspark.sql.Column``: the spark-dialect text, parsed by
+    Spark in one JVM call (requires an active session)."""
+    from pyspark.sql import functions as F
+
+    return F.expr(to_sql(node, schema, "spark"))

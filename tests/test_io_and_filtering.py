@@ -2,15 +2,26 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pytest
+
 from pulsar_message_filter_spark.filtering import (
     ACCEPT,
     REJECT,
     RESCHEDULE,
+    fan_out,
     route,
     subscription_views,
     with_verdict,
 )
-from pulsar_message_filter_spark.io import TABLES, load
+from pulsar_message_filter_spark.io import (
+    _WIDEN_FLOOR,
+    TABLES,
+    invalidate_load_memo,
+    load,
+    widen,
+)
 from tests.conftest import SF_SMOKE
 
 EXPECTED_DTYPES = {
@@ -125,3 +136,80 @@ def test_read_any_routes_corrupt_rows(spark, tmp_path):
     assert sorted(r.doc_id for r in clean.collect()) == [1, 2]
     bad = [r._corrupt_record for r in corrupt.collect()]
     assert len(bad) == 2 and "THIS IS NOT JSON" in bad
+
+
+def test_subscription_views_filter_the_source(spark):
+    """Each view is a plain filter of the source: no fan-out columns in its
+    plan, and its count equals a one-pass aggregate over fan_out's flags."""
+    import pyspark.sql.functions as F
+
+    events = load(spark, "events", SF_SMOKE)
+    subs = {
+        "click": "event_type = 'click'",
+        "hot": "props.k > 90",
+        "mid": "value BETWEEN 10 AND 50",
+        "none": "props.absent = 'x'",
+    }
+    views = subscription_views(events, subs)
+    for name, view in views.items():
+        assert view.columns == events.columns, name
+        assert "sub_" not in view._jdf.queryExecution().analyzed().toString(), name
+    flags = fan_out(events, subs).groupBy().agg(
+        *[F.count_if(F.col(f"sub_{name}")).alias(name) for name in subs]
+    ).first()
+    assert {name: view.count() for name, view in views.items()} == flags.asDict()
+    assert flags["none"] == 0 and flags["click"] > 0
+
+
+@contextmanager
+def _widen_floor(spark, value: str):
+    prev = spark.conf.get("spark.pmf.widen.floor", None)
+    spark.conf.set("spark.pmf.widen.floor", value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.pmf.widen.floor")
+        else:
+            spark.conf.set("spark.pmf.widen.floor", prev)
+
+
+def test_widen_floor_boundary(spark):
+    """Only scans below min(defaultParallelism, floor) are widened; a scan
+    with partitions in [floor, defaultParallelism) is returned as is."""
+    par = spark.sparkContext.defaultParallelism
+    if par < 3:
+        pytest.skip("needs defaultParallelism >= 3 to leave room below it")
+    floor = par - 1
+    with _widen_floor(spark, str(floor)):
+        at_floor = spark.range(0, 64, 1, floor)
+        assert widen(at_floor) is at_floor
+        below = spark.range(0, 64, 1, floor - 1)
+        assert widen(below).rdd.getNumPartitions() == par
+
+
+def test_widen_malformed_floor_falls_back(spark):
+    par = spark.sparkContext.defaultParallelism
+    with _widen_floor(spark, "sixteen"):
+        wide = spark.range(0, 64, 1, min(par, _WIDEN_FLOOR))
+        assert widen(wide) is wide
+        if par > 1:
+            assert widen(spark.range(0, 64, 1, 1)).rdd.getNumPartitions() == par
+
+
+def test_invalidate_load_memo(spark, tmp_path):
+    """load() pins the first read of a path; invalidate_load_memo re-reads."""
+    path = str(tmp_path / "region.parquet")
+    spark.range(2).write.parquet(path)
+    first = load(spark, "region", str(tmp_path))
+    assert load(spark, "region", str(tmp_path)) is first
+    assert first.count() == 2
+
+    spark.range(5).write.mode("overwrite").parquet(path)
+    assert load(spark, "region", str(tmp_path)) is first
+    invalidate_load_memo(spark)
+    fresh = load(spark, "region", str(tmp_path))
+    assert fresh is not first and fresh.count() == 5
+
+    invalidate_load_memo()  # every session's memo
+    assert load(spark, "region", str(tmp_path)) is not fresh

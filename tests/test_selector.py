@@ -312,3 +312,105 @@ def test_differential_vs_duckdb(spark, duck):
             ).fetchall()
         }
         assert spark_ids == duck_ids, f"selector diverged: {text}"
+
+
+# --- literal edge cases: Spark vs DuckDB on crafted rows ------------------------
+
+_EDGE_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+_EDGE_ROWS = [
+    (1, "2024-01-01 00:00:00", 7, "it's", 0.2, '{"k": "3000000001", "s": "a\\\\b"}'),
+    (2, "2024-01-05 00:00:00", 3000000000, "a\\b", 0.25, '{"k": "5", "flag": "TRUE"}'),
+    (3, "2024-01-09 00:00:00", 2147483648, "x_1", -0.5, '{"k": "oops", "flag": "no"}'),
+    (4, "2024-01-13 00:00:00", 9, "x%1", 1e16, '{"s": "it\'s"}'),
+    (5, "2024-01-17 00:00:00", 11, "abc123", 0.1, "{}"),
+]
+
+_EDGE_SELECTORS = [
+    "event_type = 'it''s'",  # quote
+    "event_type = 'a\\b'",  # backslash
+    "props.s = 'a\\b'",  # backslash inside a JSON property
+    "props.s = 'it''s'",
+    "event_type REGEXP '\\d'",  # regex escape
+    "event_type NOT REGEXP '^[a-z]+\\d+$'",
+    "event_type LIKE 'x!_%' ESCAPE '!'",  # LIKE ... ESCAPE
+    "event_type NOT LIKE 'x!%%' ESCAPE '!'",
+    "user_id = 3000000000",  # long above 2^31
+    "user_id >= 2147483648",
+    "props.k = 3000000001",
+    "value = 0.2",  # double
+    "value BETWEEN 0.1 AND 0.25",
+    "value NOT BETWEEN 0.1 AND 0.25",
+    "value > -0.4",
+    "value >= 1e16",
+    "ts >= '2024-01-08 00:00:00'",  # string → timestamp cast
+    "ts BETWEEN '2024-01-02 00:00:00' AND '2024-01-10 00:00:00'",
+    "props.flag",  # string → boolean (JMS Boolean.valueOf)
+    "props.k IN (5, 3000000001)",
+]
+
+
+@pytest.fixture(scope="module")
+def edge_tables(spark):
+    import datetime as dt
+
+    import duckdb
+
+    rows = [
+        (i, dt.datetime.fromisoformat(ts), u, e, v, p)
+        for i, ts, u, e, v, p in _EDGE_ROWS
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+        "event_type VARCHAR, value DOUBLE, props VARCHAR)"
+    )
+    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?, ?, ?)", rows)
+    yield spark.createDataFrame(rows, _EDGE_DDL), con
+    con.close()
+
+
+def _selected_ids(edge_tables, sel: Selector) -> tuple[list[int], list[int]]:
+    df, con = edge_tables
+    spark_ids = sorted(r.event_id for r in sel.apply(df).collect())
+    duck_ids = sorted(
+        r[0]
+        for r in con.execute(f"SELECT event_id FROM events WHERE {sel.duckdb_sql()}").fetchall()
+    )
+    return spark_ids, duck_ids
+
+
+@pytest.mark.parametrize("text", _EDGE_SELECTORS)
+def test_literal_edge_cases_vs_duckdb(edge_tables, text):
+    sel = Selector(text)
+    spark_ids, duck_ids = _selected_ids(edge_tables, sel)
+    assert spark_ids == duck_ids, (text, sel.spark_sql(), sel.duckdb_sql())
+    assert duck_ids, f"edge selector selects nothing: {text}"
+
+
+@pytest.mark.parametrize("bound", [float("inf"), float("-inf")])
+def test_non_finite_param_vs_duckdb(edge_tables, bound):
+    sel = Selector("value < ${b} OR value > ${b}", params={"b": bound})
+    spark_ids, duck_ids = _selected_ids(edge_tables, sel)
+    assert spark_ids == duck_ids == [1, 2, 3, 4, 5]
+
+
+def test_spark_dialect_literals():
+    sql = Selector("event_type = 'a\\b' AND value > 0.2 AND user_id BETWEEN 1 AND 2").spark_sql()
+    assert "'a\\\\b'" in sql  # backslash doubled for Spark's string unescaping
+    assert "0.2D" in sql  # a double, not a decimal
+    assert "((`user_id` >= 1) AND (`user_id` <= 2))" in sql  # Column.between's pair
+    like = Selector("event_type LIKE 'x!_%' ESCAPE '!'").spark_sql()
+    assert "RLIKE" in like and "ESCAPE" not in like
+
+
+def test_spark_dialect_string_cast(spark):
+    from pulsar_message_filter_spark.selector.ast_nodes import Cast, Lit
+    from pulsar_message_filter_spark.selector.compiler import to_column, to_sql
+
+    node = Cast(Lit(7, "long"), "string")
+    assert to_sql(node, EVENTS_SCHEMA, "spark") == "TRY_CAST(7 AS STRING)"
+    assert to_sql(node, EVENTS_SCHEMA, "duckdb") == "TRY_CAST(7 AS VARCHAR)"
+    assert spark.range(1).select(to_column(node, EVENTS_SCHEMA)).first()[0] == "7"
