@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 
 from pulsar_message_filter_spark.io import load
 from pulsar_message_filter_spark.registry import graded
+from pulsar_message_filter_spark.streaming.pipeline import epoch_write, read_store
 
 # ---------------------------------------------------------------------------
 # F1 — exact dedup
@@ -525,16 +526,12 @@ def minhash_dedup_incremental(
         F.greatest("id_a", "id_b").alias(id_col)
     ).distinct()
 
-    # (3) vs history (if the store exists yet); under epoch-aware replay,
+    # (3) vs history (if the store has data yet); under epoch-aware replay,
     # the current epoch's own first-attempt rows are not history
-    try:
-        hist = spark.read.parquet(signature_dir)
+    hist = read_store(spark, signature_dir)
+    if hist is not None:
         if epoch_id is not None and "ingest_epoch" in hist.columns:
             hist = hist.filter(F.col("ingest_epoch") != int(epoch_id))
-        have_history = True
-    except Exception:
-        have_history = False
-    if have_history:
         bands_new = _band_keys(sig_new, n_perm, n_bands).select(
             F.col("doc").alias("new_id"), "band", "key"
         )
@@ -575,13 +572,7 @@ def minhash_dedup_incremental(
     kept_ids = kept.select(F.col(id_col).alias("doc"))
     kept_sigs = sig_new.join(kept_ids, "doc")
     if epoch_id is not None:
-        (
-            kept_sigs.withColumn("ingest_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_epoch")
-            .parquet(signature_dir)
-        )
+        epoch_write(kept_sigs, epoch_id, signature_dir, epoch_col="ingest_epoch")
     else:
         kept_sigs.withColumn("ingest_epoch", F.lit(-1)).write.mode("append").parquet(
             signature_dir

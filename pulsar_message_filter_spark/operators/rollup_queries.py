@@ -7,8 +7,9 @@ The pipelines themselves are exercised live under ``readStream`` in
 ``tests/test_streaming.py`` / ``tests/test_round10_ops.py``; the queries
 here grade the *read path* (VERDICT r06 #6): they build a multi-epoch
 store in batch emulation through the SAME per-epoch summary builders and
-the SAME epoch-keyed parquet layout the streaming ``foreachBatch`` sinks
-use, then answer through ``read_mg_rollup`` / ``read_kll_rollup``.
+the SAME epoch commit the streaming ``foreachBatch`` sinks use
+(``streaming.pipeline.epoch_write``), then answer through
+``read_mg_rollup`` / ``read_kll_rollup`` / ``read_sketch_rollup``.
 
 Epoch emulation is deterministic — ``event_id % 3`` splits the events
 table into three "micro-batches" identically on both engines — so the
@@ -32,6 +33,14 @@ from pyspark.sql import functions as F
 
 from pulsar_message_filter_spark.io import load
 from pulsar_message_filter_spark.registry import graded
+from pulsar_message_filter_spark.streaming.pipeline import (
+    epoch_write,
+    kll_epoch_summary,
+    mg_epoch_summary,
+    read_kll_rollup,
+    read_mg_rollup,
+    read_sketch_rollup,
+)
 from pulsar_message_filter_spark.tmpdirs import run_scoped_dir
 
 _EPOCHS = 3
@@ -41,25 +50,12 @@ _MG_K = 12  # < #users (150 at sf0.01) so the threshold subtraction is live
 def _store_dir(query: str, sf_dir: str) -> str:
     """Per-(query, sf) store path, deterministic WITHIN this process only:
     repeated gate/bench runs in one interpreter rewrite the same epoch
-    partitions via the dynamic overwrite in :func:`_epoch_write` instead of
+    partitions via the shared dynamic overwrite (``epoch_write``) instead of
     leaking a fresh /tmp dir per invocation (VERDICT r07 hygiene note),
     while concurrent processes get disjoint roots (ADVICE r08: a fully
     fixed path raced gate-vs-bench on the same sf)."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     return run_scoped_dir(f"pmf_{query}_{tag}_e{_EPOCHS}")
-
-
-def _epoch_write(summary: DataFrame, epoch: int, store_dir: str) -> None:
-    """The exact epoch-keyed dynamic-overwrite discipline of the streaming
-    sinks (``streaming/pipeline.py``): a replayed epoch rewrites only its
-    own partition."""
-    (
-        summary.withColumn("epoch_id", F.lit(epoch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_dir)
-    )
 
 
 @graded(
@@ -112,16 +108,11 @@ def stream_mg_rollup_readpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drives ``mg_epoch_summary`` → epoch-keyed parquet store →
     ``read_mg_rollup`` end-to-end through the graded surface.  Plan-time
     side job (store build) — keep off bench HEADLINE per TODO watch list."""
-    from pulsar_message_filter_spark.streaming.pipeline import (
-        mg_epoch_summary,
-        read_mg_rollup,
-    )
-
     store = _store_dir("mg_readpath", sf_dir)
     events = load(spark, "events", sf_dir)
     for e in range(_EPOCHS):
         batch = events.filter(F.col("event_id") % _EPOCHS == e)
-        _epoch_write(mg_epoch_summary(batch, "user_id", k=_MG_K), e, store)
+        epoch_write(mg_epoch_summary(batch, "user_id", k=_MG_K), e, store)
     return read_mg_rollup(spark, store, k=_MG_K)
 
 
@@ -141,18 +132,13 @@ def stream_kll_rollup_readpath(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``read_kll_rollup`` end-to-end, then grades itself: each merged
     estimate is joined back against the raw values to emit
     ``|rank(est)/n - p|``.  Plan-time side job — off bench HEADLINE."""
-    from pulsar_message_filter_spark.streaming.pipeline import (
-        kll_epoch_summary,
-        read_kll_rollup,
-    )
-
     store = _store_dir("kll_readpath", sf_dir)
     events = load(spark, "events", sf_dir).select(
         "event_id", "event_type", F.col("value").alias("v")
     )
     for e in range(_EPOCHS):
         batch = events.filter(F.col("event_id") % _EPOCHS == e)
-        _epoch_write(kll_epoch_summary(batch, "event_type", "v"), e, store)
+        epoch_write(kll_epoch_summary(batch, "event_type", "v"), e, store)
 
     est = read_kll_rollup(spark, store, ps=(0.25, 0.5, 0.75, 0.9))
     # exact rank of each estimate: broadcast the ~20 estimate rows against
@@ -209,14 +195,13 @@ def stream_cms_rollup_readpath(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_estimate,
         hll_registers,
     )
-    from pulsar_message_filter_spark.streaming.pipeline import read_sketch_rollup
 
     store = _store_dir("cms_readpath", sf_dir)
     events = load(spark, "events", sf_dir)
     for e in range(_EPOCHS):
         batch = events.filter(F.col("event_id") % _EPOCHS == e)
-        _epoch_write(cms_build(batch, "user_id"), e, f"{store}/cms")
-        _epoch_write(hll_registers(batch, "user_id"), e, f"{store}/hll")
+        epoch_write(cms_build(batch, "user_id"), e, f"{store}/cms")
+        epoch_write(hll_registers(batch, "user_id"), e, f"{store}/hll")
     merged_cms, _merged_hll = read_sketch_rollup(spark, store)
     keys = events.filter(F.col("user_id") < 40).select("user_id").distinct()
     return cms_estimate(merged_cms, keys, "user_id")
@@ -265,14 +250,13 @@ def stream_hll_rollup_readpath(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_build,
         hll_registers,
     )
-    from pulsar_message_filter_spark.streaming.pipeline import read_sketch_rollup
 
     store = _store_dir("hll_readpath", sf_dir)
     events = load(spark, "events", sf_dir)
     for e in range(_EPOCHS):
         batch = events.filter(F.col("event_id") % _EPOCHS == e)
-        _epoch_write(cms_build(batch, "user_id"), e, f"{store}/cms")
-        _epoch_write(hll_registers(batch, "user_id"), e, f"{store}/hll")
+        epoch_write(cms_build(batch, "user_id"), e, f"{store}/cms")
+        epoch_write(hll_registers(batch, "user_id"), e, f"{store}/hll")
     _merged_cms, merged_hll = read_sketch_rollup(spark, store)
     # exact count as a 1-row aggregate subtree in the same plan — one
     # action instead of a driver count + lit (count_distinct == the

@@ -1660,6 +1660,36 @@ _MG_K = 16  # counters kept per summary: estimate error <= n / (k+1)
 _MG_SALTS = 8  # stage-1 sub-summaries (stand-ins for executor partials)
 
 
+def mg_compress(
+    df: DataFrame, key_col: str, weight_col: str, k: int, by=()
+) -> DataFrame:
+    """Misra-Gries COMPRESS of a ``(*by, key, weight)`` counter table, per
+    ``by`` group: subtract the (k+1)-th largest weight (ties broken by key)
+    and keep the positive remainders — at most k rows per group, returned as
+    ``(*by, key_col, weight_col)``.
+
+    The rank AND the threshold come from ONE pass: the unordered window
+    over the same ``by`` partitioning adds no exchange, so the compress is a
+    single shuffle on ``by`` — no threshold re-aggregation, no recompute of
+    the input.  With ``by=()`` it is a single-partition window, sized for
+    inputs that are already bounded (salts·k merged counters, one epoch's
+    distinct keys)."""
+    w_rank = Window.partitionBy(*by).orderBy(F.desc(weight_col), F.asc(key_col))
+    w_group = Window.partitionBy(*by)
+    return (
+        df.withColumn("rk", F.row_number().over(w_rank))
+        .withColumn(
+            "t",
+            F.coalesce(
+                F.max(F.when(F.col("rk") == k + 1, F.col(weight_col))).over(w_group),
+                F.lit(0),
+            ),
+        )
+        .filter((F.col("rk") <= k) & (F.col(weight_col) - F.col("t") > 0))
+        .select(*by, key_col, (F.col(weight_col) - F.col("t")).alias(weight_col))
+    )
+
+
 @graded(
     "sketch_misra_gries",
     oracle=f"""
@@ -1734,8 +1764,6 @@ def sketch_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
     salts*k counter rows.  At cluster scale 'salt' is the executor
     partial; here it is a deterministic md5-derived spray so the oracle
     can replay it bit-exactly."""
-    from pyspark.sql import Window
-
     ev = load(spark, "events", sf_dir)
     salt = (
         F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10)
@@ -1743,42 +1771,15 @@ def sketch_misra_gries(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("salt")
 
     counts = ev.select(salt, "user_id").groupBy("salt", "user_id").agg(
-        F.count("*").alias("c")
+        F.count("*").alias("w")
     )
-    # rank AND the (k+1)-th threshold in ONE pass: the plain window over
-    # the same (salt) partitioning adds no exchange, so the whole per-salt
-    # compress is a single shuffle on salt — no thresh re-aggregation, no
-    # branch recompute of the counts
-    w_salt = Window.partitionBy("salt").orderBy(F.desc("c"), F.asc("user_id"))
-    w_salt_all = Window.partitionBy("salt")
-    partials = (
-        counts.withColumn("rk", F.row_number().over(w_salt))
-        .withColumn(
-            "t",
-            F.coalesce(
-                F.max(F.when(F.col("rk") == _MG_K + 1, F.col("c"))).over(w_salt_all),
-                F.lit(0),
-            ),
-        )
-        .filter((F.col("rk") <= _MG_K) & (F.col("c") - F.col("t") > 0))
-        .withColumn("w", F.col("c") - F.col("t"))
-    )
-    merged = partials.groupBy("user_id").agg(F.sum("w").alias("w"))
+    # per-salt compress: one shuffle on salt
+    partials = mg_compress(counts, "user_id", "w", _MG_K, by=("salt",))
+    merged = partials.groupBy("user_id").agg(F.sum("w").alias("est"))
     # final compress over at most salts*k rows — single-partition by design
-    # and size (bounded-collect class); same one-pass rank+threshold trick
-    w_all = Window.orderBy(F.desc("w"), F.asc("user_id"))
-    w_every = Window.partitionBy()
+    # and size (bounded-collect class)
     kept = (
-        merged.withColumn("rk", F.row_number().over(w_all))
-        .withColumn(
-            "t",
-            F.coalesce(
-                F.max(F.when(F.col("rk") == _MG_K + 1, F.col("w"))).over(w_every),
-                F.lit(0),
-            ),
-        )
-        .filter((F.col("rk") <= _MG_K) & (F.col("w") - F.col("t") > 0))
-        .withColumn("est", F.col("w") - F.col("t"))
+        mg_compress(merged, "user_id", "est", _MG_K)
         # <= k rows by construction: pin them so the truth-filter branch and
         # the final join read ONE materialization instead of re-running the
         # whole sketch pipeline (same bounded-intermediate discipline as

@@ -82,7 +82,6 @@ def graded(
 # bucket 1.  Regenerate with tools/rotate_driver_verified.py.
 _DRIVER_VERIFIED_ROUND: dict[str, int] = {
     "a_csv_roundtrip_read": 8,
-    "a_ingest_corrupt_routing": 8,
     "a_jsonl_roundtrip_read": 10,
     "a_partition_pruned_read": 8,
     "a_schema_evolution_read": 7,

@@ -7,6 +7,12 @@ checkpointed exactly-once delivery.
 
 All functions take any message-shaped (streaming) DataFrame — rate source,
 file source, or the Pulsar connector — semantics are identical.
+
+Every sink and store commits through :func:`epoch_write`, the one
+epoch-keyed dynamic partition overwrite that makes a replayed micro-batch
+rewrite exactly its own output, and every store's history is read through
+:func:`read_store`, the one place where "nothing committed yet" reads as
+no history.
 """
 
 from __future__ import annotations
@@ -32,6 +38,47 @@ def _cents_half_up(v: float) -> int:
     hash-graded batch twin on exact .5 cents (ADVICE r08)."""
     cents = _math.floor(abs(v) * 100 + 0.5)
     return cents if v >= 0 else -cents
+
+
+#: Error conditions under which a parquet store holds no data yet: the
+#: directory was never created, or every epoch committed so far wrote 0 rows
+#: (a dynamic overwrite of an empty frame leaves no part file to infer from).
+_NO_STORE = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+
+def epoch_write(
+    df: DataFrame,
+    epoch: int,
+    path: str,
+    *partition_cols: str,
+    epoch_col: str = "epoch_id",
+) -> None:
+    """The idempotent per-epoch commit shared by every sink and store: the
+    rows are tagged with ``epoch_col = epoch`` and written as a dynamic
+    partition overwrite keyed by it (then by ``partition_cols``), so
+    re-running an epoch (micro-batch replay after a crash) replaces exactly
+    that epoch's partitions — no duplicates, no other epoch touched."""
+    (
+        df.withColumn(epoch_col, F.lit(int(epoch)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(epoch_col, *partition_cols)
+        .parquet(path)
+    )
+
+
+def read_store(spark, path: str) -> DataFrame | None:
+    """An epoch store's parquet history, or ``None`` while it has no data
+    yet (see ``_NO_STORE``).  Any other failure — a corrupt part file, an
+    unreadable directory — propagates, so the micro-batch fails and the
+    checkpoint retries it instead of treating the store as empty and
+    silently letting every duplicate through."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _NO_STORE:
+            return None
+        raise
 
 
 def route_batch(
@@ -80,13 +127,9 @@ def write_verdict_epoch(
     :func:`filtered_sink_pipeline`: dynamic partition overwrite keyed by
     ``epoch_id`` means re-running the same epoch (micro-batch replay after a
     crash) replaces exactly that epoch's output — no duplicates."""
-    (
-        route_batch(batch, accept, reschedule, retry_delay, max_redeliveries)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id", "verdict")
-        .parquet(out_dir)
+    epoch_write(
+        route_batch(batch, accept, reschedule, retry_delay, max_redeliveries),
+        epoch_id, out_dir, "verdict",
     )
 
 
@@ -155,13 +198,7 @@ def streaming_dedup_pipeline(
             batch, signature_dir, text_col, id_col, threshold,
             epoch_id=int(epoch_id),
         )
-        (
-            kept.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
+        epoch_write(kept, epoch_id, out_dir)
 
     return (
         doc_stream.writeStream.foreachBatch(write_batch)
@@ -820,16 +857,13 @@ def bloom_dedup_pipeline(
 
         words_dir = os.path.join(store_dir, "words")
         keys_dir = os.path.join(store_dir, "keys")
-        try:
-            hist_words = (
-                spark.read.parquet(words_dir)
-                .filter(F.col("epoch_id") < e)
-                .groupBy("word_idx")
-                .agg(F.bit_or("word").alias("word"))
-                .collect()
-            )
-        except AnalysisException:  # path not yet created (first epoch)
-            hist_words = []
+        words = read_store(spark, words_dir)
+        hist_words = [] if words is None else (
+            words.filter(F.col("epoch_id") < e)
+            .groupBy("word_idx")
+            .agg(F.bit_or("word").alias("word"))
+            .collect()
+        )
 
         if hist_words:
             maybe = bloom_maybe_contains(words_to_filter(hist_words, m), m, kk)
@@ -852,21 +886,12 @@ def bloom_dedup_pipeline(
         else:
             kept = batch_d
 
-        def epoch_write(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("epoch_id", F.lit(e))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(path)
-            )
-
         kept = kept.localCheckpoint(eager=True)  # one compute, three writes
-        epoch_write(kept.drop("__h"), out_dir)
+        epoch_write(kept.drop("__h"), e, out_dir)
         epoch_write(
-            kept.select("__h", canon.alias("__canon")).distinct(), keys_dir
+            kept.select("__h", canon.alias("__canon")).distinct(), e, keys_dir
         )
-        epoch_write(bloom_word_contributions(kept, "__h", m, kk), words_dir)
+        epoch_write(bloom_word_contributions(kept, "__h", m, kk), e, words_dir)
 
     return (
         doc_stream.writeStream.foreachBatch(write_batch)
@@ -920,16 +945,9 @@ def survivor_pick_pipeline(
             F.explode(token_ngrams(F.col(text_col), SPAN_WIDTH)).alias("span"),
         )
 
-        try:
-            hist_spans = (
-                spark.read.parquet(spans_dir)
-                .filter(F.col("epoch_id") < e)
-                .select("span")
-            )
-        except AnalysisException:  # path not yet created (first epoch)
-            hist_spans = None
-
+        hist_spans = read_store(spark, spans_dir)
         if hist_spans is not None:
+            hist_spans = hist_spans.filter(F.col("epoch_id") < e).select("span")
             dup_of_hist = (
                 spans.join(hist_spans, "span", "left_semi").select(id_col).distinct()
             )
@@ -955,21 +973,13 @@ def survivor_pick_pipeline(
         dominated = verdicts.filter(F.col("kept") == 0).select(id_col)
         kept = fresh.join(dominated, id_col, "left_anti").localCheckpoint(eager=True)
 
-        def epoch_write(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("epoch_id", F.lit(e))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(path)
-            )
-
-        epoch_write(kept, out_dir)
+        epoch_write(kept, e, out_dir)
         epoch_write(
             kept.select(
                 F.col(id_col),
                 F.explode(token_ngrams(F.col(text_col), SPAN_WIDTH)).alias("span"),
             ).select("span").distinct(),
+            e,
             spans_dir,
         )
 
@@ -1002,7 +1012,7 @@ def ivm_view_pipeline(
     dynamic partition overwrite of an EMPTY view writes no files: without
     the manifest, an epoch that empties the view would be invisible to
     the next epoch's max-epoch lookup and its deltas silently lost.  Only
-    a missing path reads as "no prior state" (``AnalysisException``);
+    a store with no data yet reads as "no prior state" (:func:`read_store`);
     any other storage failure propagates and fails the micro-batch so
     the checkpoint retries it — never silently resetting the view.
 
@@ -1023,43 +1033,21 @@ def ivm_view_pipeline(
         spark = batch.sparkSession
         e = int(epoch_id)
         delta = agg_delta(batch, group_col)
-        try:
-            max_e = (
-                spark.read.parquet(manifest_dir)
-                .filter(F.col("epoch_id") < e)
-                .agg(F.max("epoch_id"))
-                .collect()[0][0]
-            )
-        except AnalysisException:
-            max_e = None
-        if max_e is None:
+        manifest = read_store(spark, manifest_dir)
+        max_e = None if manifest is None else (
+            manifest.filter(F.col("epoch_id") < e)
+            .agg(F.max("epoch_id"))
+            .collect()[0][0]
+        )
+        # every prior epoch's view may have been empty → no state files exist
+        state = None if max_e is None else read_store(spark, state_dir)
+        if state is None:
             base = spark.createDataFrame([], empty_schema)
         else:
-            try:
-                base = (
-                    spark.read.parquet(state_dir)
-                    .filter(F.col("epoch_id") == max_e)
-                    .drop("epoch_id")
-                )
-            except AnalysisException:
-                # every prior epoch's view was empty → no state files exist
-                base = spark.createDataFrame([], empty_schema)
+            base = state.filter(F.col("epoch_id") == max_e).drop("epoch_id")
         updated = apply_agg_delta(base, delta, group_col).localCheckpoint(eager=True)
-        (
-            updated.withColumn("epoch_id", F.lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(state_dir)
-        )
-        (
-            updated.agg(F.count("*").alias("n_groups"))
-            .withColumn("epoch_id", F.lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(manifest_dir)
-        )
+        epoch_write(updated, e, state_dir)
+        epoch_write(updated.agg(F.count("*").alias("n_groups")), e, manifest_dir)
 
     return (
         change_stream.writeStream.foreachBatch(write_batch)
@@ -1097,20 +1085,9 @@ def sketch_rollup_pipeline(
     hll_dir = os.path.join(store_dir, "hll")
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        e = int(epoch_id)
-
-        def epoch_write(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("epoch_id", F.lit(e))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(path)
-            )
-
         batch = batch.localCheckpoint(eager=True)  # one compute, two sketches
-        epoch_write(cms_build(batch, key_col), cms_dir)
-        epoch_write(hll_registers(batch, key_col), hll_dir)
+        epoch_write(cms_build(batch, key_col), epoch_id, cms_dir)
+        epoch_write(hll_registers(batch, key_col), epoch_id, hll_dir)
 
     return (
         event_stream.writeStream.foreachBatch(write_batch)
@@ -1143,10 +1120,9 @@ def read_sketch_rollup(spark, store_dir: str, epochs=None):
     make ``epoch_id`` ambiguous to partition discovery."""
     import os
 
-    try:
-        cms = spark.read.parquet(os.path.join(store_dir, "cms"))
-        hll = spark.read.parquet(os.path.join(store_dir, "hll"))
-    except AnalysisException:
+    cms = read_store(spark, os.path.join(store_dir, "cms"))
+    hll = read_store(spark, os.path.join(store_dir, "hll"))
+    if cms is None or hll is None:
         return (
             spark.createDataFrame([], "row int, cell bigint, cnt bigint"),
             spark.createDataFrame([], "register bigint, max_rho bigint"),
@@ -1219,8 +1195,9 @@ def psi_finalize(
 ) -> DataFrame:
     """Batch finalization of closed windows: Laplace-smoothed proportions
     against the (broadcast) reference histogram, one PSI row per window.
-    Runs inside ``foreachBatch`` — each appended window arrives exactly
-    once, so the output table is append-only and idempotent per epoch."""
+    Runs inside ``foreachBatch``: each closed window arrives in exactly
+    one epoch, and :func:`psi_monitor_pipeline` commits it with
+    :func:`epoch_write`, so a replayed epoch rewrites its own rows."""
     windows = closed.select(
         F.col("window.start").alias("window_start")
     ).distinct()
@@ -1275,8 +1252,7 @@ def psi_monitor_pipeline(
     ref.count()
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        out = psi_finalize(batch, ref, n_bins=n_bins)
-        out.write.mode("append").parquet(out_dir)
+        epoch_write(psi_finalize(batch, ref, n_bins=n_bins), epoch_id, out_dir)
 
     counts = windowed_bin_counts(
         stream, window=window, watermark=watermark, width=width, n_bins=n_bins
@@ -1332,16 +1308,11 @@ def winnowing_dedup_pipeline(
             eager=True
         )
 
-        try:
-            hist = (
-                spark.read.parquet(fp_dir)
-                .filter(F.col("epoch_id") != e)
-                .select(F.col("doc").alias("hist_doc"), "fp")
-            )
-        except AnalysisException:  # first epoch: no store yet
-            hist = None
-
+        hist = read_store(spark, fp_dir)
         if hist is not None:
+            hist = hist.filter(F.col("epoch_id") != e).select(
+                F.col("doc").alias("hist_doc"), "fp"
+            )
             # per historical DOCUMENT, matching the in-batch per-pair rule:
             # a newcomer drops only when some single kept doc shares
             # >= min_shared fingerprints with it (pooling fingerprints
@@ -1378,18 +1349,9 @@ def winnowing_dedup_pipeline(
             .localCheckpoint(eager=True)
         )
 
-        def epoch_write(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("epoch_id", F.lit(e))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch_id")
-                .parquet(path)
-            )
-
-        epoch_write(kept, out_dir)
+        epoch_write(kept, e, out_dir)
         kept_ids = kept.select(F.col(id_col).alias("doc"))
-        epoch_write(fps.join(kept_ids, "doc"), fp_dir)
+        epoch_write(fps.join(kept_ids, "doc"), e, fp_dir)
 
     return (
         doc_stream.writeStream.foreachBatch(write_batch)
@@ -1449,15 +1411,7 @@ def kll_rollup_pipeline(
     micro-batch rewrites its partition bit-for-bit.
     """
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        e = int(epoch_id)
-        (
-            kll_epoch_summary(batch, key_col, value_col)
-            .withColumn("epoch_id", F.lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_dir)
-        )
+        epoch_write(kll_epoch_summary(batch, key_col, value_col), epoch_id, store_dir)
 
     return (
         event_stream.writeStream.foreachBatch(write_batch)
@@ -1500,28 +1454,15 @@ def read_kll_rollup(spark, store_dir: str, ps=(0.25, 0.5, 0.75, 0.9), epochs=Non
 
 def mg_epoch_summary(batch: DataFrame, key_col: str, k: int = 16) -> DataFrame:
     """One micro-batch's Misra-Gries summary: ``(key, w)`` with ≤ k rows —
-    counts per key, subtract the (k+1)-th largest, keep positives (the
-    one-pass rank+threshold window, same shape as
-    ``operators.sketch.sketch_misra_gries``).  Shared by
+    counts per key, subtract the (k+1)-th largest, keep positives
+    (``operators.sketch.mg_compress``, the compress
+    ``sketch_misra_gries`` also runs).  Shared by
     :func:`mg_rollup_pipeline` and the graded read-path query
     ``stream_mg_rollup_readpath`` so both exercise identical compression."""
-    from pyspark.sql import Window
+    from pulsar_message_filter_spark.operators.sketch import mg_compress
 
-    counts = batch.groupBy(key_col).agg(F.count("*").alias("c"))
-    w_rank = Window.orderBy(F.desc("c"), F.asc(key_col))
-    w_all = Window.partitionBy()
-    return (
-        counts.withColumn("rk", F.row_number().over(w_rank))
-        .withColumn(
-            "t",
-            F.coalesce(
-                F.max(F.when(F.col("rk") == k + 1, F.col("c"))).over(w_all),
-                F.lit(0),
-            ),
-        )
-        .filter((F.col("rk") <= k) & (F.col("c") - F.col("t") > 0))
-        .select(key_col, (F.col("c") - F.col("t")).alias("w"))
-    )
+    counts = batch.groupBy(key_col).agg(F.count("*").alias("w"))
+    return mg_compress(counts, key_col, "w", k)
 
 
 def mg_rollup_pipeline(
@@ -1537,22 +1478,13 @@ def mg_rollup_pipeline(
     CMS/HLL (:func:`sketch_rollup_pipeline`) and KLL
     (:func:`kll_rollup_pipeline`).
 
-    Compression is the relational one-pass rank+threshold window (same
-    shape as ``operators.sketch.sketch_misra_gries``): counts per key,
-    subtract the (k+1)-th largest, keep positives.  Deterministic — a
-    replayed micro-batch rewrites its partition bit-for-bit.
+    Compression is :func:`mg_epoch_summary` (``sketch.mg_compress``):
+    counts per key, subtract the (k+1)-th largest, keep positives.
+    Deterministic — a replayed micro-batch rewrites its partition
+    bit-for-bit.
     """
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        e = int(epoch_id)
-        summary = mg_epoch_summary(batch, key_col, k).withColumn(
-            "epoch_id", F.lit(e)
-        )
-        (
-            summary.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(store_dir)
-        )
+        epoch_write(mg_epoch_summary(batch, key_col, k), epoch_id, store_dir)
 
     return (
         event_stream.writeStream.foreachBatch(write_batch)
@@ -1565,22 +1497,9 @@ def read_mg_rollup(spark, store_dir: str, k: int = 16):
     """Merge-on-read over the MG store: counter-sum per key across all
     epochs, then one final compress to k — the mergeable-MG theorem keeps
     total undercount <= n/(k+1) regardless of how many epochs merged."""
-    from pyspark.sql import Window
+    from pulsar_message_filter_spark.operators.sketch import mg_compress
 
     df = spark.read.parquet(store_dir)
     key_col = [c for c in df.columns if c not in ("w", "epoch_id")][0]
-    merged = df.groupBy(key_col).agg(F.sum("w").alias("w"))
-    w_rank = Window.orderBy(F.desc("w"), F.asc(key_col))
-    w_all = Window.partitionBy()
-    return (
-        merged.withColumn("rk", F.row_number().over(w_rank))
-        .withColumn(
-            "t",
-            F.coalesce(
-                F.max(F.when(F.col("rk") == k + 1, F.col("w"))).over(w_all),
-                F.lit(0),
-            ),
-        )
-        .filter((F.col("rk") <= k) & (F.col("w") - F.col("t") > 0))
-        .select(key_col, (F.col("w") - F.col("t")).alias("est_count"))
-    )
+    merged = df.groupBy(key_col).agg(F.sum("w").alias("est_count"))
+    return mg_compress(merged, key_col, "est_count", k)

@@ -1292,18 +1292,31 @@ def test_psi_monitor_flags_drifted_window_only(spark, tmp_path):
     _write_events(spark, w1 + w2 + sentinel, input_dir)
 
     stream = file_message_stream(spark, input_dir)
-    q = psi_monitor_pipeline(
-        stream,
-        reference,
-        out_dir,
-        checkpoint=str(tmp_path / "ck"),
-        window="1 hour",
-        watermark="30 minutes",
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    def run_monitor() -> None:
+        q = psi_monitor_pipeline(
+            stream,
+            reference,
+            out_dir,
+            checkpoint=str(tmp_path / "ck"),
+            window="1 hour",
+            watermark="30 minutes",
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run_monitor()
+    first = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+    # crash after the sink wrote the last batch but before the checkpoint
+    # committed it: the restarted query replays that batch, and the sink
+    # must rewrite its rows rather than append them a second time
+    commits = tmp_path / "ck" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        (commits / name).unlink(missing_ok=True)
+    run_monitor()
+    assert sorted(tuple(r) for r in spark.read.parquet(out_dir).collect()) == first
 
     rows = {
         r.window_start.strftime("%H:%M"): r for r in spark.read.parquet(out_dir).collect()
